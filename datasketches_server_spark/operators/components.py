@@ -17,8 +17,13 @@ clusters converge in 2-3 rounds.  Node ids stay strings end-to-end -- no
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -56,8 +61,10 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     lineage to recompute from."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort; the context cleaner remains the backstop
+    except (AttributeError, Py4JError):
+        # best-effort: the plan is not a LogicalRDD or there is no JVM
+        # handle; the context cleaner remains the backstop
+        log.debug("localCheckpoint release failed", exc_info=True)
 
 
 def _fingerprint(e: DataFrame) -> tuple[int, int]:

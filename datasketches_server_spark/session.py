@@ -1,4 +1,15 @@
-"""SparkSession factory tuned for the sandbox (local[N], single JVM).
+"""SparkSession factory: local[N] in one JVM, sized to the host.
+
+- ``spark.driver.memory``: 40% of ``MemTotal`` in ``/proc/meminfo``,
+  rounded down to whole GiB, at least 1g (6g on a 16 GB machine).  The
+  ``SPARK_DRIVER_MEMORY`` environment variable overrides it; it is the
+  one deployment setting the session reads.
+- cores: the CPUs this process may run on (``os.sched_getaffinity``).
+
+Fixed settings the query plans depend on, each with its reason below:
+shuffled-hash joins preferred over sort-merge joins, AQE's minimum
+coalesced partition at 64k, a 64m broadcast threshold and a 10k
+generated-class cache.
 
 At cluster scale the same settings apply except shuffle partitions /
 maxPartitionBytes, which should be sized to executor memory; AQE then
@@ -8,8 +19,22 @@ re-coalesces and splits skewed partitions at runtime.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else 40% of the host's memory in
+    whole GiB (at least ``"1g"``); ``meminfo`` is ``/proc/meminfo`` text."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    if meminfo is None:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    kib = int(re.search(r"^MemTotal:\s*(\d+)\s*kB", meminfo, re.M).group(1))
+    return f"{max(1, kib * 2 // 5 // 2**20)}g"
 
 
 def get_spark(
@@ -18,7 +43,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         # ~cores in local mode; a 1000-executor cluster would use
         # 2-3x total cores and rely on AQE coalescing.
@@ -31,24 +56,18 @@ def get_spark(
     # environment before the JVM starts.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     os.environ["PYTHONPATH"] = pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         # tmpfs shuffle dir when available: the sandbox's virtio disk
         # (~580 MB/s, async writeback) adds multi-second jitter per
         # multi-GB shuffle; real clusters have per-executor local disks
-        .config(
-            "spark.local.dir",
-            "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp",
-        )
+        .config("spark.local.dir", "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # catalog tables (write_bucketed) land in tmp, not the repo cwd;
-        # per-uid-and-pid path so concurrent runs (bench + pytest, two CI
-        # jobs) can't overwrite each other's saveAsTable data
-        .config(
-            "spark.sql.warehouse.dir",
-            f"/tmp/spark-warehouse-{os.getuid()}-{os.getpid()}",
-        )
+        # per-uid-and-pid path so concurrent runs (a benchmark + pytest,
+        # two CI jobs) can't overwrite each other's saveAsTable data
+        .config("spark.sql.warehouse.dir", f"/tmp/spark-warehouse-{os.getuid()}-{os.getpid()}")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalesces by SHUFFLE BYTES; this engine's hot shuffles are
@@ -57,29 +76,18 @@ def get_spark(
         # CPU-bound stage onto ~6 of 32 cores (measured: q111's ranking
         # window ran (5+1)/6 tasks with a straggler tail; 64k keeps it at
         # 32 tasks -- same-session interleaved A/B min wall 9.5 s vs
-        # 11.5 s at 1 MB, pre-restructure).  Parameterised: on a real
-        # cluster with deep per-task overheads raise it back via env.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # 11.5 s at 1 MB).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # shuffled-hash over sort-merge (guide section 3.1): the verify
         # join's big side is fat per-conv state (shingle arrays); SHJ
         # skips the two big-side sorts.  Same-session interleaved A/B at
         # 100k convs: candidate+verify 8.2/7.2 s SMJ vs 6.9/5.6 s SHJ,
         # identical edge counts.  The AQE local-map threshold bounds the
-        # per-partition build (spill-safe fallback stays SMJ); both
-        # env-parameterised for clusters where executor memory is tight.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "256m"),
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # per-partition build (spill-safe fallback stays SMJ).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # small Arrow batches: the signature kernel's per-batch working set
@@ -89,232 +97,18 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # generated-class cache: the 100-entry default evicts the heavy
         # queries' compiled classes while a many-query session (the
-        # bench, the oracle sweep) churns hundreds of codegen shapes;
-        # an evicted class is unloaded and its C2-compiled code is lost,
-        # so the next invocation re-runs interpreted (measured: the same
-        # warmed query bimodally burns 30-50 vs 300-500 CPU-s in-bench).
-        # Cache entries are source-text keyed soft references -- raising
-        # the cap costs only metaspace the JVM can still reclaim under
-        # pressure.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
+        # oracle sweep) churns hundreds of codegen shapes; an evicted
+        # class is unloaded and its C2-compiled code is lost, so the next
+        # invocation re-runs interpreted (measured: the same warmed query
+        # bimodally burns 30-50 vs 300-500 CPU-s).  Cache entries are
+        # source-text keyed soft references -- raising the cap costs only
+        # metaspace the JVM can still reclaim under pressure.
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # up from Spark's 10m so small dims and the touched-bucket probe
+        # broadcast instead of shuffling (test_plan_quality checks both)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.python.daemon.module", "datasketches_server_spark.worker_daemon")
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        _warm_session(spark)
     return spark
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time per-JVM operator warm-up at session creation.
-
-    The first execution of each operator family pays costs that have
-    nothing to do with the data: forking the 32 Python daemon workers
-    and initialising Arrow, Janino/C2 compilation of whole-stage
-    codegen, Tungsten sort + shuffle writer + LZ4 paths, and the
-    window/join/aggregate exec frameworks.  Measured on the bench
-    corpus: the SAME dedup pipeline runs ~26-31 s cold vs ~11-13 s warm
-    (guide section 1: time the plan, not the startup).  bench.py's own
-    warm-up only exercises a scalar hash, so every one of those costs
-    used to land inside the first timed query; running a miniature
-    (300-conv) end-to-end pass here moves them to session creation,
-    which no query path times.  Deterministic, tiny, and computed from
-    nothing but a synthetic literal corpus -- no bench input is touched,
-    no result is reused (the bench corpora differ in size and content).
-    Disable with SPARK_GRAFT_WARMUP=0."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WARMED:
-        return
-    _WARMED.add(app_id)
-    spark.sparkContext.setJobDescription("session warm-up (operator JIT)")
-    try:
-        from pyspark.sql import functions as F
-
-        from .config import PipelineConfig
-        from .plans.metrics import (
-            cluster_metrics,
-            global_rollup,
-            shingle_metrics,
-            simscore_metrics,
-        )
-        from .plans.pipeline import dedup_pipeline
-        from .sources.synth import synth_transcripts
-
-        # Warm SCALE: codegen classes are shaped by AQE's size-driven
-        # decisions, so a 300-conv warm pass compiles broadcast-shaped
-        # classes while the benchmark corpus executes shuffled-hash
-        # shapes -- compilation-counter measured: after a same-scale
-        # warm pass (different seed, nothing reused) the first bench
-        # invocation compiles 0 new classes and runs 5.9 s vs 45
-        # classes / 9.7-12.6 s after a miniature-only warm.  Benchmark
-        # sessions (app name "bench", i.e. the frozen bench.py) therefore
-        # warm at the bench's own corpus size (capped at 100k convs to
-        # bound the untimed setup); every other session keeps the cheap
-        # miniature pass.  Override with SPARK_GRAFT_WARM_CONVS.
-        warm_n = os.environ.get("SPARK_GRAFT_WARM_CONVS")
-        if warm_n is not None:
-            warm_n = int(warm_n)
-        elif (spark.sparkContext.appName or "") == "bench":
-            sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-            try:
-                sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
-            except ValueError:
-                sf = 0.1
-            bench_n = int(
-                os.environ.get(
-                    "SPARK_GRAFT_BENCH_CONVS", str(max(2000, int(1_000_000 * sf)))
-                )
-            )
-            warm_n = min(100_000, bench_n)
-        else:
-            warm_n = 300
-        t = synth_transcripts(spark, n_convs=warm_n, seed=9)
-        if warm_n >= 20_000:
-            # the bench persists its corpus, so its operators read an
-            # InMemoryTableScan -- a DIFFERENT generated class than a
-            # direct scan of the synth plan (compilation-counter: the
-            # fully-"warmed" prefix pass still compiled 29 classes
-            # because warm-up had scanned an unpersisted corpus).
-            # Persist the warm corpus so warmed shapes match timed ones.
-            t = t.persist()
-            t.count()
-        res = dedup_pipeline(t, PipelineConfig())
-        res.clusters.select("cluster_id").distinct().count()
-        global_rollup(
-            shingle_metrics(res.conv_state),
-            simscore_metrics(res.edges),
-            cluster_metrics(res.clusters),
-        ).collect()
-        if warm_n >= 20_000:
-            # bench-scale sessions also warm the incremental-dedup path
-            # (band-index probe, member pushdown, delta CC): its codegen
-            # shapes are its own, so the first timed batch otherwise
-            # pays their compilation.  Same mirror as the bench's
-            # untimed setup: index written to a scratch dir, a 1% batch
-            # (distinct seed + id prefix) absorbed, everything removed.
-            import shutil
-            import tempfile
-
-            from .plans.band_index import read_band_index, write_band_index
-            from .plans.pipeline import incremental_dedup
-
-            wd = tempfile.mkdtemp(prefix="warm_bandidx_")
-            try:
-                cfgw = PipelineConfig()
-                write_band_index(res.conv_state, wd, cfgw, "warm")
-                batch = synth_transcripts(
-                    spark, n_convs=max(50, warm_n // 100), seed=4243
-                ).withColumn("conv_id", F.concat(F.lit("winc-"), F.col("conv_id")))
-                inc = incremental_dedup(
-                    res.conv_state, res.edges, batch, cfgw,
-                    old_buckets=read_band_index(spark, wd, cfgw, "warm"),
-                    old_clusters=res.clusters,
-                )
-                inc.clusters.select("cluster_id").distinct().count()
-                inc.unpersist()
-            finally:
-                shutil.rmtree(wd, ignore_errors=True)
-        res.unpersist()
-        if warm_n >= 20_000:
-            # second same-scale pass, different seed: AQE shapes sit on
-            # statistics boundaries, so a single warm corpus leaves a
-            # residue of stat-variant classes that the timed corpus then
-            # compiles (counter-measured: 12 residual compilations after
-            # one warm pass, 2 after two; timed wall 6.0 s).
-            t2 = synth_transcripts(spark, n_convs=warm_n, seed=10).persist()
-            t2.count()
-            res2 = dedup_pipeline(t2, PipelineConfig())
-            res2.clusters.select("cluster_id").distinct().count()
-            res2.unpersist()
-            t2.unpersist()
-        if warm_n >= 20_000:
-            # the docs-table pipeline runs the same operators at
-            # broadcast scale (a few thousand convs), which are
-            # DIFFERENT codegen shapes than the 100k warm pass above;
-            # one pass over the miniature sf0.01 table compiles them
-            # (real small fixture, k=3 like the docs query family;
-            # nothing from it is reused -- the timed run recomputes
-            # from its own inputs)
-            from .config import ShingleConfig
-            from .sources.synth import transcripts_from_documents
-
-            sfw = "/root/testdata/sf0.01"
-            if os.path.isdir(sfw):
-                res2 = dedup_pipeline(
-                    transcripts_from_documents(spark, sfw),
-                    PipelineConfig(shingle=ShingleConfig(k=3)),
-                )
-                res2.clusters.count()
-                res2.unpersist()
-        from .operators.dedup import cross_doc_duplicate_coverage
-        from .operators.prefix import turn_prefix_pairs
-
-        turn_prefix_pairs(t if warm_n > 2000 else t.limit(2000)).count()
-        docs = t.limit(500).select(
-            F.col("conv_id").alias("doc_id"), F.col("text")
-        )
-        cross_doc_duplicate_coverage(docs, window=8, exact=False).count()
-        if warm_n >= 20_000:
-            # the bench's exactsubstr row reads documents.parquet
-            # directly -- a parquet-scan codegen shape the synth-derived
-            # warm above does not produce; one pass over the miniature
-            # sf0.01 table compiles it
-            pq = "/root/testdata/sf0.01/documents.parquet"
-            if os.path.isdir(pq) or os.path.isfile(pq):
-                cross_doc_duplicate_coverage(
-                    spark.read.parquet(pq), window=8, exact=False
-                ).count()
-        # compile the heavy registered queries' generated code on a
-        # miniature corpus: whole-stage codegen sources depend on the
-        # plan's expressions, not the data, so Janino's class cache and
-        # the JIT profile carry over to the real invocation.  Measured:
-        # q111's verify stage burns 230 CPU-s interpreted vs 48.7 CPU-s
-        # compiled for the identical computation when its first
-        # invocation lands behind a busy compile queue.  sf0.01 (500
-        # docs) preferred over sf0.001: AQE picks the same join shapes
-        # as the full-size run there, so the classes C2 compiles are the
-        # ones the timed invocation executes, and the loops run hot
-        # enough for tiered compilation to reach C2 (a 50-doc corpus
-        # leaves them at C1).
-        # two sizes, because AQE picks different join shapes per input
-        # size and each shape is its own generated class: a query whose
-        # sf0.1 shapes match only the sf0.01-warmed classes runs C2-hot,
-        # while its sibling needs the sf0.001 shapes (CPU-time measured:
-        # q111 first-invocation burn 505 vs 57 CPU-s depending on which
-        # dir warmed it; q127 the mirror image).  Warming both keeps
-        # every heavy query's first timed invocation compiled.
-        warm_dirs = os.environ.get(
-            "SPARK_GRAFT_WARM_SF", "/root/testdata/sf0.001:/root/testdata/sf0.01"
-        ).split(":")
-        from .plans import queries as Qm
-
-        for sf in warm_dirs:
-            if not os.path.isdir(sf):
-                continue
-            for fn in (
-                "q111_allpairs_ssjoin",
-                "q127_winnowing_pairs",
-                "q30_cosine_topk",
-                "q31_ann_lsh_cosine",
-                # relational rows: cheap, but their first invocation
-                # otherwise compiles its join/agg classes inside the
-                # timed region
-                "q01_pricing_summary",
-                "q02_top_revenue_customers",
-                "q05_events_hourly",
-            ):
-                getattr(Qm, fn)(spark, sf).collect()
-        if warm_n >= 20_000:
-            t.unpersist()
-    except Exception:
-        pass  # warm-up is best-effort; never block a session on it
-    finally:
-        spark.sparkContext.setJobDescription(None)

@@ -9,7 +9,7 @@ documents corpus ~10x the sf0.1 driver table (one doc per planted-corpus
 conversation: same duplicate structure ExactSubstr exists to find -- no
 external data), runs the identical operator at sf0.1 scale and at
 sf1-equivalent scale on local[32], and reports walls, tokens/sec, and
-the scale ratio.  Probe-gated like bench.py: cpu_ceiling markers before
+the scale ratio.  Probe-gated: cpu_ceiling markers before
 and after bracket the measurement so a noisy epoch is visible in the
 artifact.
 
