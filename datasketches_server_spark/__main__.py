@@ -4,7 +4,7 @@ Absolute imports so this file can be passed directly to spark-submit
 (with --py-files providing the package); `python -m` works too.
 
     spark-submit --master local[N] --py-files dss.zip \
-        -m datasketches_server_spark  # (or path to this file)
+        datasketches_server_spark/__main__.py \
         --input  /path/to/transcripts_parquet_or_table \
         --workdir /path/to/checkpoints \
         [--config config.json] [--synth-convs 100000]

@@ -1,11 +1,11 @@
 """Engine-portable deterministic primitives (Spark Column + ANSI-SQL twins).
 
 The driver's correctness gate replays every registered query in DuckDB
-(CORRECTNESS_r*.json); anything that must hash-match bit-identically
-across engines therefore has to avoid engine-specific hashes
-(``xxhash64``), non-correctly-rounded libm calls (``ln``, ``exp``) and
-64-bit wraparound arithmetic (DuckDB raises on BIGINT overflow).  This
-module provides the shared vocabulary:
+(artifacts/CORRECTNESS_r*.json); anything that must hash-match
+bit-identically across engines therefore has to avoid engine-specific
+hashes (``xxhash64``), non-correctly-rounded libm calls (``ln``,
+``exp``) and 64-bit wraparound arithmetic (DuckDB raises on BIGINT
+overflow).  This module provides the shared vocabulary:
 
 * :func:`md5_long60` / :func:`md5_long60_sql` -- 60-bit integer from the
   md5 hex digest (md5 is byte-identical everywhere; 60 bits < 2^63 so no

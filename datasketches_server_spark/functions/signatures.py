@@ -35,6 +35,13 @@ def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
 def _batch_signatures(
     shingle_arrays: pd.Series, a: np.ndarray, b: np.ndarray, simhash_bits: int
 ) -> pd.DataFrame:
+    """Reference MinHash/SimHash over already-hashed shingle arrays.
+
+    The unblocked, whole-batch form of the signature math: one
+    (num_perm, total_shingles) buffer, no row blocking.  Nothing in the
+    pipeline calls it; tests compare the cache-blocked kernel in
+    :func:`_batch_text_signatures` against it bit for bit.
+    """
     vals = [
         np.asarray(x, dtype=np.int64) if len(x) else np.zeros(1, dtype=np.int64)
         for x in shingle_arrays
@@ -59,23 +66,6 @@ def _batch_signatures(
     simhash = packed.astype(np.int64)
 
     return pd.DataFrame({"minhash": list(minhash), "simhash": simhash})
-
-
-def signature_udf(cfg: MinHashConfig = MinHashConfig()):
-    """pandas UDF: array<long> shingles -> struct(minhash array<long>, simhash long)."""
-    a, b = _perm_params(cfg.num_perm, cfg.seed)
-    out_type = T.StructType(
-        [
-            T.StructField("minhash", T.ArrayType(T.LongType())),
-            T.StructField("simhash", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def _sig(shingle_arrays: pd.Series) -> pd.DataFrame:
-        return _batch_signatures(shingle_arrays, a, b, cfg.simhash_bits)
-
-    return _sig
 
 
 DEFAULT_TOKEN_PATTERN = "[a-z0-9]+"
@@ -285,11 +275,11 @@ def text_signature_udf(
     lowercase: bool = True,
 ):
     """pandas UDF: full_text -> struct(shingles array<long>, minhash
-    array<long>, simhash long).  The pipeline hot path: one Arrow round
-    trip per document, zero interpreted Catalyst lambdas (the native
-    shingle expression is ~50x slower at scale -- kept only for the
-    SQL-replayable oracle queries).  token_pattern uses re.findall
-    (match) semantics -- the same convention as ShingleConfig."""
+    array<long>, simhash long).  The pipeline's only signature path: one
+    Arrow round trip per batch, zero interpreted Catalyst lambdas (a
+    native transform/slice/xxhash64 shingler measured ~50x slower at
+    scale).  token_pattern uses re.findall (match) semantics -- the same
+    convention as ShingleConfig."""
     a, b = _perm_params(cfg.num_perm, cfg.seed)
     out_type = T.StructType(
         [

@@ -170,6 +170,38 @@ def connected_components(
     return labels.groupBy("conv_id").agg(F.min("cluster_id").alias("cluster_id"))
 
 
+def _contracted_components(
+    old_clusters: DataFrame,
+    new_edges: DataFrame,
+    driver_threshold: int,
+    contracted_out: list[DataFrame] | None,
+) -> DataFrame:
+    """Contract every endpoint of new_edges to its old cluster label (new
+    convs keep their own id) and solve connected components on that
+    delta-sized graph.  Returns the remap (conv_id = old label or new
+    conv id, cluster_id = merged component's min id)."""
+    lab_a = old_clusters.select(
+        F.col("conv_id").alias("a"), F.col("cluster_id").alias("_la")
+    )
+    lab_b = old_clusters.select(
+        F.col("conv_id").alias("b"), F.col("cluster_id").alias("_lb")
+    )
+    contracted = (
+        new_edges.select("a", "b")
+        .join(lab_a, "a", "left")
+        .join(lab_b, "b", "left")
+        .select(
+            F.coalesce(F.col("_la"), F.col("a")).alias("a"),
+            F.coalesce(F.col("_lb"), F.col("b")).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    if contracted_out is not None:
+        contracted_out.append(contracted)
+    return connected_components(contracted, driver_threshold=driver_threshold)
+
+
 def incremental_components(
     old_clusters: DataFrame,
     new_edges: DataFrame,
@@ -204,26 +236,9 @@ def incremental_components(
     contracted edge relation, so callers can assert the CC input scales
     with the delta.
     """
-    lab_a = old_clusters.select(
-        F.col("conv_id").alias("a"), F.col("cluster_id").alias("_la")
+    remap = _contracted_components(
+        old_clusters, new_edges, driver_threshold, contracted_out
     )
-    lab_b = old_clusters.select(
-        F.col("conv_id").alias("b"), F.col("cluster_id").alias("_lb")
-    )
-    contracted = (
-        new_edges.select("a", "b")
-        .join(lab_a, "a", "left")
-        .join(lab_b, "b", "left")
-        .select(
-            F.coalesce(F.col("_la"), F.col("a")).alias("a"),
-            F.coalesce(F.col("_lb"), F.col("b")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    if contracted_out is not None:
-        contracted_out.append(contracted)
-    remap = connected_components(contracted, driver_threshold=driver_threshold)
 
     # old side: relabel only clusters whose LABEL appears in the
     # contracted graph (a broadcast-friendly join -- remap scales with
@@ -269,26 +284,9 @@ def incremental_components_delta(
     get self-labels in the delta so composition covers the whole
     corpus.
     """
-    lab_a = old_clusters.select(
-        F.col("conv_id").alias("a"), F.col("cluster_id").alias("_la")
+    remap = _contracted_components(
+        old_clusters, new_edges, driver_threshold, contracted_out
     )
-    lab_b = old_clusters.select(
-        F.col("conv_id").alias("b"), F.col("cluster_id").alias("_lb")
-    )
-    contracted = (
-        new_edges.select("a", "b")
-        .join(lab_a, "a", "left")
-        .join(lab_b, "b", "left")
-        .select(
-            F.coalesce(F.col("_la"), F.col("a")).alias("a"),
-            F.coalesce(F.col("_lb"), F.col("b")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    if contracted_out is not None:
-        contracted_out.append(contracted)
-    remap = connected_components(contracted, driver_threshold=driver_threshold)
 
     old_remap = remap.select(
         F.col("conv_id").alias("_l"), F.col("cluster_id").alias("_nl")

@@ -180,7 +180,6 @@ def incremental_candidate_pairs(
     resources: list[DataFrame] | None = None,
     ranked_out: list[DataFrame] | None = None,
     window_input_out: list[DataFrame] | None = None,
-    broadcast_touched: bool = True,
     unit_col: str | None = None,
 ) -> DataFrame:
     """Candidate pairs for an incremental batch WITHOUT re-banding or
@@ -198,8 +197,8 @@ def incremental_candidate_pairs(
     Plan shape (the 100 TB daily-ingest path):
 
     1. ``touched`` = distinct buckets of the new batch (|new| x bands
-       keys, broadcast by default) -- the old index is filtered with a
-       broadcast semi join: ONE scan, no shuffle of the corpus index.
+       keys) -- the old index is filtered with a broadcast semi join:
+       ONE scan, no shuffle of the corpus index.
     2. old members of touched buckets + all new band rows run through
        the same salted pre-cap / global rank / ALL_PAIRS_CAP topology as
        :func:`candidate_pairs` -- identical deterministic member order,
@@ -215,9 +214,6 @@ def incremental_candidate_pairs(
     old run's settled edges can differ (incremental keeps a superset of
     old connectivity -- it never loses edges).
 
-    broadcast_touched: keep True while |new| x bands keys fit the
-    broadcast budget (a daily batch); at extreme batch sizes disable and
-    let AQE pick the join.
     window_input_out: test/observability hook -- receives the lazy
     combined relation feeding the windows, so callers can assert its
     row count scales with |new|, not |corpus|.
@@ -227,9 +223,7 @@ def incremental_candidate_pairs(
     per-unit pair generation is complete.
     """
     unit = [unit_col] if unit_col else []
-    touched = new_buckets.select("bucket").distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(new_buckets.select("bucket").distinct())
     old_t = (
         old_buckets.select("bucket", "conv_id", *unit)
         .join(touched, "bucket", "left_semi")

@@ -291,7 +291,9 @@ def incremental_dedup(
     None falls back to banding old_state on the fly -- no signature UDF,
     but an O(corpus) band explode; pass the index at scale.
     old_clusters: the existing labeling (DedupResult.clusters) enabling
-    delta-sized connected components.
+    delta-sized connected components.  It may omit singletons
+    (connected_components output): every conv in old_state and the
+    batch is labeled either way.
 
     Equivalence: identical clusters to a full recompute on the combined
     corpus whenever no band bucket crosses ALL_PAIRS_CAP or bucket_cap
@@ -314,12 +316,12 @@ def incremental_dedup(
     # Truncate the old labeling's LOGICAL plan (r6): old_clusters arrives
     # carrying the entire previous pipeline's plan tree, and the
     # incremental path references it four times (both contraction sides,
-    # the relabel join, the new-label anti-join) plus the singleton
-    # attach below -- every action re-analyzes that corpus-sized tree on
-    # the driver (event-log measured: ~3 s of the ~7 s batch wall was
-    # inter-job driver gaps).  The relation itself is small (one narrow
-    # row per conv, reading straight from the caller's cache), so an
-    # eager localCheckpoint costs one ~0.1 s job and makes it a leaf.
+    # the relabel join, the new-label anti-join) -- every action
+    # re-analyzes that corpus-sized tree on the driver (event-log
+    # measured: ~3 s of the ~7 s batch wall was inter-job driver gaps).
+    # The relation itself is small (one narrow row per conv, reading
+    # straight from the caller's cache), so an eager localCheckpoint
+    # costs one ~0.1 s job and makes it a leaf.
     # Intra-invocation only; blocks are freed with the result.
     if old_clusters is not None:
         old_clusters = old_clusters.select(
@@ -382,19 +384,11 @@ def incremental_dedup(
         )
     else:
         labels = connected_components(edges, driver_threshold=cc_driver_threshold)
-    # singleton attach: the node set is (every old conv) + (every new
-    # conv).  old_clusters covers every old conv exactly once by its
-    # documented contract (attach_singletons output, singletons
-    # included), so when it is available the checkpointed labeling
-    # supplies the old ids and the big fat-state union never enters the
-    # attach plan -- identical rows, leaf-sized planning.
-    if old_clusters is not None:
-        nodes = old_clusters.select("conv_id").unionByName(
-            new_state.select("conv_id")
-        )
-    else:
-        nodes = state
-    clusters = attach_singletons(labels, nodes).persist()
+    # singleton attach over every old and new conv.  The node set comes
+    # from the signature state, not old_clusters: a partial labeling
+    # (connected_components output without its singletons) would
+    # otherwise drop the old singletons from the result.
+    clusters = attach_singletons(labels, state.select("conv_id")).persist()
     resources.append(clusters)
     from ..operators.lsh import bucket_stats_from_ranked
 

@@ -14,6 +14,9 @@ sampling, update+merge+query), and the training-data operators
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +30,8 @@ from ..functions.sketches import (
     sketch_update,
 )
 from ..sources.synth import transcripts_from_documents
+
+log = logging.getLogger(__name__)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -96,10 +101,7 @@ def documents_dedup_result(spark: SparkSession, sf_dir: str, subset: str | None 
         _DEDUP_MEMO.pop(k)  # dead session: its persisted blocks are gone
     while len(_DEDUP_MEMO) >= _DEDUP_MEMO_MAX:
         oldest = next(iter(_DEDUP_MEMO))
-        try:
-            _DEDUP_MEMO.pop(oldest).unpersist()
-        except Exception:
-            pass
+        _release(_DEDUP_MEMO.pop(oldest))
     _DEDUP_MEMO[key] = res
     return res
 
@@ -122,6 +124,16 @@ _SCRATCH_DFS: list = []
 _SCRATCH_TAG: object = None
 
 
+def _release(cached) -> None:
+    """Best-effort unpersist of a memoized DedupResult or scratch
+    DataFrame: its session may already be gone (a stopped JVM raises
+    Py4JError), in which case there are no blocks left to free."""
+    try:
+        cached.unpersist()
+    except Py4JError:
+        log.debug("unpersist failed", exc_info=True)
+
+
 def _scratch(df: DataFrame, tag: object) -> DataFrame:
     """Persist an intermediate referenced several times inside one query
     plan.  ``tag`` identifies the building query invocation; a new tag
@@ -130,10 +142,7 @@ def _scratch(df: DataFrame, tag: object) -> DataFrame:
     global _SCRATCH_TAG
     if tag is not _SCRATCH_TAG:
         for old in _SCRATCH_DFS:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            _release(old)
         _SCRATCH_DFS.clear()
         _SCRATCH_TAG = tag
     df = df.persist()
@@ -145,17 +154,11 @@ def clear_dedup_memo() -> None:
     """Unpersist and drop every memoized DedupResult (sweep teardown),
     plus any scratch blocks the last query build persisted."""
     for res in _DEDUP_MEMO.values():
-        try:
-            res.unpersist()
-        except Exception:
-            pass
+        _release(res)
     _DEDUP_MEMO.clear()
     global _SCRATCH_TAG
     for old in _SCRATCH_DFS:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _release(old)
     _SCRATCH_DFS.clear()
     _SCRATCH_TAG = None
 

@@ -136,7 +136,6 @@ def incremental_embedding_pairs(
     seed: int = 42,
     bucket_cap: int = 128,
     probe_radius: int = 1,
-    broadcast_touched: bool = True,
     window_input_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-dup pairs with >= 1 batch-side member, probing the persisted
@@ -162,9 +161,7 @@ def incremental_embedding_pairs(
     """
     nb = _bucketize(new_data, "vec_id", n_tables, n_bits, seed)
     probes = _probe(nb, n_bits, probe_radius).withColumnRenamed("vec_id", "pid")
-    touched = probes.select("table_idx", "code").distinct()
-    if broadcast_touched:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(probes.select("table_idx", "code").distinct())
     old_t = (
         old_index.select("vec_id", "table_idx", "code")
         .join(touched, ["table_idx", "code"], "left_semi")

@@ -27,7 +27,7 @@ Per-batch cost: window-explode runs over the BATCH only; the index is
 probed with a broadcast of the batch's window keys (no shuffle of the
 index); the span merge re-islands only touched docs.  Nothing scales
 with the corpus except sequential columnar scans of the index -- the
-same contract the band index certifies in BENCH_incremental.json.
+same contract the band index certifies in artifacts/BENCH_incremental.json.
 
 Scale tier only (wkey = xxhash64 of the window string): the narrow-row
 shape.  Equality with a full recompute is asserted against the same

@@ -73,12 +73,14 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_path):
     """incremental_dedup(old, new) must produce the identical clustering
     to a full recompute on the combined corpus: signatures and bucket
     hashes are deterministic and cluster_id = min conv_id, so the
-    assignments match row for row (uncapped-bucket regime).  All three
+    assignments match row for row (uncapped-bucket regime).  All four
     modes must agree: derived banding fallback, persisted band index,
-    and band index + incremental connected components."""
+    and band index + incremental connected components from a complete
+    or a singleton-free old labeling (old singletons must not drop)."""
     from pyspark.sql import functions as F
 
     from datasketches_server_spark.config import PipelineConfig
+    from datasketches_server_spark.operators.components import connected_components
     from datasketches_server_spark.plans.band_index import (
         read_band_index,
         write_band_index,
@@ -99,15 +101,20 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_path):
 
     full = dedup_pipeline(full_t, cfg)
     want = {r["conv_id"]: r["cluster_id"] for r in full.clusters.collect()}
+    # connected_components output: the old labeling minus its singletons
+    partial = connected_components(old.edges.select("a", "b"))
+    assert partial.count() < old.conv_state.count()
 
     for kwargs in (
         {},  # derived banding fallback + full CC over edge union
         {"old_buckets": index},
         {"old_buckets": index, "old_clusters": old.clusters},
+        {"old_buckets": index, "old_clusters": partial},
     ):
         inc = incremental_dedup(old.conv_state, old.edges, new_t, cfg, **kwargs)
         incremental = {r["conv_id"]: r["cluster_id"] for r in inc.clusters.collect()}
         assert incremental == want, f"mode {list(kwargs)} diverged"
+        assert inc.clusters.count() == len(want)  # each conv labeled once
         assert inc.conv_state.count() == full.conv_state.count()
         inc.unpersist()
 

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E
 
@@ -43,7 +45,7 @@ def test_packaged_entry_via_spark_submit():
     import subprocess
 
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/submit_entry.py"],
+        [sys.executable, os.path.join(REPO, "tools", "submit_entry.py")],
         capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, (proc.stdout[-1000:], proc.stderr[-2000:])

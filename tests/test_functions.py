@@ -1,5 +1,6 @@
-"""Unit tests: shingles vs a pure-python oracle, MinHash estimate
-accuracy, SimHash monotonicity, synth determinism, turn reassembly."""
+"""Unit tests: fused signature kernel vs its unblocked reference, MinHash
+estimate accuracy, SimHash monotonicity, synth determinism, turn
+reassembly."""
 
 from __future__ import annotations
 
@@ -8,34 +9,19 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from datasketches_server_spark.config import MinHashConfig, ShingleConfig
-from datasketches_server_spark.functions.shingle import shingles
 from datasketches_server_spark.functions.signatures import (
+    DEFAULT_TOKEN_PATTERN,
     _batch_signatures,
+    _batch_text_signatures,
     _perm_params,
     exact_jaccard,
     minhash_jaccard,
-    signature_udf,
     simhash_hamming,
 )
 from datasketches_server_spark.sources.synth import (
     synth_transcripts,
     transcripts_from_documents,
 )
-
-
-def test_shingle_count_and_distinctness(spark):
-    df = spark.createDataFrame(
-        [("a", "one two three four five"), ("b", "x y"), ("c", "w w w w w w")],
-        ["conv_id", "text"],
-    )
-    out = {
-        r["conv_id"]: r["sh"]
-        for r in df.select("conv_id", shingles(F.col("text"), ShingleConfig(k=3)).alias("sh")).collect()
-    }
-    assert len(out["a"]) == 3  # 5 tokens, k=3 -> 3 windows
-    assert len(out["b"]) == 1  # shorter than k -> whole text
-    assert len(out["c"]) == 1  # identical windows dedupe
 
 
 def test_minhash_estimates_jaccard():
@@ -52,14 +38,27 @@ def test_minhash_estimates_jaccard():
     assert sigs["simhash"][0] == sigs["simhash"][2]
 
 
-def test_signature_udf_matches_local(spark):
-    pdf = pd.DataFrame({"shingles": [list(range(1, 50)), list(range(25, 80))]})
-    df = spark.createDataFrame(pdf)
-    got = df.select(signature_udf(MinHashConfig())(F.col("shingles")).alias("s")).collect()
+def test_fused_kernel_matches_reference():
+    """The cache-blocked fused kernel equals the unblocked reference bit
+    for bit, on a batch spanning several BLOCK_SH row blocks, through
+    both tokenizer paths (bytes-level default and pandas-regex custom)."""
     a, b = _perm_params(128, 42)
-    want = _batch_signatures(pdf["shingles"], a, b, 64)
-    assert list(got[0]["s"]["minhash"]) == list(want["minhash"][0])
-    assert got[1]["s"]["simhash"] == want["simhash"][1]
+    rng = np.random.default_rng(3)
+    vocab = np.array([f"w{i}" for i in range(400)] + [f"W{i}x" for i in range(100)])
+    texts = [" ".join(rng.choice(vocab, size=int(rng.integers(0, 3000)))) for _ in range(200)]
+    texts += ["", "One", "a\nb c"]
+    for pattern, lowercase in ((DEFAULT_TOKEN_PATTERN, True), ("[A-Za-z0-9]+", False)):
+        out = _batch_text_signatures(pd.Series(texts), 5, a, b, 64, pattern, lowercase)
+        assert sum(len(s) for s in out["shingles"]) > 4 * 8192  # several row blocks
+        want = _batch_signatures(out["shingles"], a, b, 64)
+        assert np.array_equal(np.stack(out["minhash"]), np.stack(want["minhash"]))
+        assert np.array_equal(out["simhash"].to_numpy(), want["simhash"].to_numpy())
+
+        small = _batch_text_signatures(
+            pd.Series(["one two three four five", "x y", "w w w w w w"]), 3, a, b, 64,
+            pattern, lowercase,
+        )
+        assert [len(s) for s in small["shingles"]] == [3, 1, 1]  # windows / short / dedupe
 
 
 def test_jaccard_and_hamming_columns(spark):

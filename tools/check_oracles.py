@@ -21,7 +21,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -136,8 +137,7 @@ def main():
     Q.clear_dedup_memo()
     print(f"{len(failures)} failures" + (f": {failures}" if failures else ""))
     if not only:  # full-registry sweep -> committed round-close artifact
-        art = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "CORRECTNESS_local.json")
+        art = os.path.join(REPO, "CORRECTNESS_local.json")
         with open(art, "w") as f:
             json.dump(
                 {
