@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from datasketches_server_spark.config import MinHashConfig
 from datasketches_server_spark.functions.signatures import (
     DEFAULT_TOKEN_PATTERN,
     _batch_signatures,
@@ -17,11 +18,28 @@ from datasketches_server_spark.functions.signatures import (
     exact_jaccard,
     minhash_jaccard,
     simhash_hamming,
+    text_signature_udf,
 )
 from datasketches_server_spark.sources.synth import (
     synth_transcripts,
     transcripts_from_documents,
 )
+
+
+def test_shingle_count_and_distinctness(spark):
+    df = spark.createDataFrame(
+        [("a", "one two three four five"), ("b", "x y"), ("c", "w w w w w w")],
+        ["conv_id", "text"],
+    )
+    for pattern, lowercase in ((DEFAULT_TOKEN_PATTERN, True), ("[A-Za-z0-9]+", False)):
+        sig = text_signature_udf(3, MinHashConfig(), pattern, lowercase)
+        out = {
+            r["conv_id"]: r["sh"]
+            for r in df.select("conv_id", sig(F.col("text")).shingles.alias("sh")).collect()
+        }
+        assert len(out["a"]) == 3  # 5 tokens, k=3 -> 3 windows
+        assert len(out["b"]) == 1  # shorter than k -> whole text
+        assert len(out["c"]) == 1  # identical windows dedupe
 
 
 def test_minhash_estimates_jaccard():
@@ -54,11 +72,19 @@ def test_fused_kernel_matches_reference():
         assert np.array_equal(np.stack(out["minhash"]), np.stack(want["minhash"]))
         assert np.array_equal(out["simhash"].to_numpy(), want["simhash"].to_numpy())
 
-        small = _batch_text_signatures(
-            pd.Series(["one two three four five", "x y", "w w w w w w"]), 3, a, b, 64,
-            pattern, lowercase,
-        )
-        assert [len(s) for s in small["shingles"]] == [3, 1, 1]  # windows / short / dedupe
+
+def test_signature_udf_matches_local(spark):
+    """The Spark signature UDF returns what the local reference computes
+    on the same shingles."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"text": ["one two three four five six", "four five six seven eight"]})
+    )
+    got = df.select(text_signature_udf(4)(F.col("text")).alias("s")).collect()
+    a, b = _perm_params(128, 42)
+    want = _batch_signatures(pd.Series([list(r["s"]["shingles"]) for r in got]), a, b, 64)
+    for i, r in enumerate(got):
+        assert list(r["s"]["minhash"]) == list(want["minhash"][i])
+        assert r["s"]["simhash"] == want["simhash"][i]
 
 
 def test_jaccard_and_hamming_columns(spark):
