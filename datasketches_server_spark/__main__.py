@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -239,8 +240,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         return 0
 
     if args.bloom_build or args.seen_input:
-        import os
-
         from datasketches_server_spark.functions.text import assemble_conversations, tokens
         from datasketches_server_spark.plans.bloom_index import (
             BloomConfig,
@@ -294,8 +293,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     if args.decontam_input:
         if not args.base_fps:
             ap.error("--decontam-input requires --base-fps (the indexed chain)")
-        import os
-
         fps = args.base_fps.split(",")
         eval_t = spark.read.parquet(args.decontam_input)
         eval_fp = path_fingerprint(args.decontam_input)
@@ -438,16 +435,15 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         transcripts = synth_transcripts(spark, n_convs=args.synth_convs, seed=cfg.minhash.seed)
         input_fp = f"synth:{args.synth_convs}:{cfg.minhash.seed}"
     elif args.input:
-        transcripts = (
-            spark.read.table(args.input)
-            if "." in args.input and not args.input.startswith("/")
-            else spark.read.parquet(args.input)
-        )
-        input_fp = (
-            path_fingerprint(args.input)
-            if not ("." in args.input and not args.input.startswith("/"))
-            else args.input
-        )
+        # an existing path is parquet; anything else names a catalog
+        # table.  The path is made absolute here because the JVM
+        # resolves relative paths against its own start directory.
+        if os.path.exists(args.input):
+            transcripts = spark.read.parquet(os.path.abspath(args.input))
+            input_fp = path_fingerprint(args.input)
+        else:
+            transcripts = spark.read.table(args.input)
+            input_fp = args.input
     else:
         ap.error("--input or --synth-convs required")
 

@@ -8,6 +8,12 @@ recomputation.
 
 Design:
 
+* The runner holds no dedup logic of its own: each stage calls the
+  stage functions of plans/pipeline.py (``conv_signatures``,
+  ``full_edges``, ``batch_edges``) that ``dedup_pipeline`` and
+  ``incremental_dedup`` compose in memory, plus the connected-components
+  operators, and adds only the manifest, the work units and one write
+  per stage.  The runner and the API therefore compute the same result.
 * Work units: hash buckets of conv_id (``pmod(xxhash64(conv_id), B)``)
   for the per-conversation stage (signatures -- the expensive one);
   band-bucket ranges (``pmod(bucket_hash, edge_units)``) for the edge
@@ -45,15 +51,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.components import attach_singletons, connected_components
-from ..operators.lsh import (
-    band_buckets,
-    bucket_stats,
-    bucket_stats_from_ranked,
-    candidate_pairs,
-    verify_pairs,
+from ..operators.components import (
+    attach_singletons,
+    connected_components,
+    incremental_components_delta,
 )
-from .pipeline import conv_signatures
+from .pipeline import batch_edges, conv_signatures, full_edges, release
 
 MANIFEST = "_lineage"
 
@@ -62,12 +65,16 @@ MANIFEST = "_lineage"
 class RunStats:
     computed: dict[str, int] = field(default_factory=dict)  # stage -> units computed
     skipped: dict[str, int] = field(default_factory=dict)
-    # skew observability (no-silent-caps rule): band-bucket histogram
-    # from operators.lsh.bucket_stats, filled whenever the edge stage
+    # skew observability (no-silent-caps rule): the edge stage's bucket
+    # report (DedupResult.bucket_report), filled whenever the edge stage
     # actually computes -- n_buckets / max_bucket / star_buckets /
     # dropped_members, so capped-bucket drops are visible in the run
     # summary instead of silently shaping recall.
     bucket_stats: dict[str, int] = field(default_factory=dict)
+
+
+def _report_dict(report: DataFrame) -> dict[str, int]:
+    return {k: int(v or 0) for k, v in report.collect()[0].asDict().items()}
 
 
 class LineageRunner:
@@ -82,9 +89,10 @@ class LineageRunner:
         buckets are range-partitioned into this many units (pmod of the
         bucket hash), each checkpointed independently, so a kill during
         verify recomputes only pending units instead of the whole stage.
-        An execution knob like cc_driver_threshold (NOT part of
-        PipelineConfig: tuning it must not invalidate lineage); at 100 TB
-        size it so one unit's verify fits a re-run budget (10^2-10^3)."""
+        An execution knob, NOT part of PipelineConfig (tuning it must not
+        invalidate lineage, and the edges are the same for any value);
+        at 100 TB size it so one unit's verify fits a re-run budget
+        (10^2-10^3)."""
         self.spark = spark
         self.workdir = workdir
         self.cfg = cfg
@@ -116,24 +124,25 @@ class LineageRunner:
         )
         df.coalesce(1).write.mode("append").parquet(self._manifest_path())
 
-    def done_units(self, stage: str, input_fp: str) -> set[int]:
-        m = self.manifest()
+    def done_units(self, stage: str, input_fp: str) -> dict[int, int]:
+        """Completed unit -> its recorded row count (the newest manifest
+        row per unit wins)."""
         rows = (
-            m.where(
+            self.manifest()
+            .where(
                 (F.col("stage") == stage)
                 & (F.col("config_hash") == self.config_hash)
                 & (F.col("input_fingerprint") == input_fp)
             )
-            .select("partition_id")
-            .distinct()
+            .select("partition_id", "row_count", "finished_at")
             .collect()
         )
-        done = set()
-        for r in rows:
+        counts = {}
+        for r in sorted(rows, key=lambda r: r["finished_at"]):
             # trust manifest only if the output dir actually exists
             if os.path.isdir(self._unit_path(stage, r["partition_id"], input_fp)):
-                done.add(r["partition_id"])
-        return done
+                counts[r["partition_id"]] = r["row_count"]
+        return counts
 
     def _stage_key(self, input_fp: str) -> str:
         return f"{self.config_hash}_{input_fp}"
@@ -184,17 +193,15 @@ class LineageRunner:
     # -- pipeline ----------------------------------------------------------
     def _signatures_stage(
         self, transcripts: DataFrame, input_fp: str, stats: RunStats
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, int]:
         """Stage 1, shared by run() and run_incremental(): per-bucket
         signatures, ONE partitioned write for all pending buckets + ONE
-        bulk manifest append (see module docstring)."""
+        bulk manifest append (see module docstring).  Returns the stage
+        and its conv count, summed from the recorded unit row counts."""
         B = self.cfg.num_buckets
         bucket = F.pmod(F.xxhash64("conv_id"), F.lit(B)).cast("int")
         empty_state = conv_signatures(transcripts.limit(0), self.cfg)
-        done = self.done_units("signatures", input_fp)
-        pending = [i for i in range(B) if i not in done]
-        stats.skipped["signatures"] = len(done)
-        stats.computed["signatures"] = len(pending)
+        done, pending = self._plan_units("signatures", input_fp, B, stats)
         if pending:
             src = transcripts.withColumn("_bucket", bucket)
             pend = (
@@ -205,25 +212,78 @@ class LineageRunner:
             sigs = conv_signatures(pend.drop("_bucket"), self.cfg).withColumn(
                 "_bucket", bucket
             )
-            (
-                sigs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket")
-                .parquet(self._stage_dir("signatures", input_fp))
+            done.update(self._write_units(sigs, "signatures", input_fp, pending))
+        state = self._stage_df("signatures", input_fp, fallback=empty_state)
+        return state, sum(done.values())
+
+    def _plan_units(
+        self, stage: str, input_fp: str, n_units: int, stats: RunStats
+    ) -> tuple[dict[int, int], list[int]]:
+        """(done unit -> row count, pending units) of a stage of
+        ``n_units`` units, recorded in ``stats``."""
+        done = self.done_units(stage, input_fp)
+        pending = [i for i in range(n_units) if i not in done]
+        stats.skipped[stage] = len(done)
+        stats.computed[stage] = len(pending)
+        return done, pending
+
+    def _write_units(
+        self, df: DataFrame, stage: str, input_fp: str, pending: list[int]
+    ) -> dict[int, int]:
+        """ONE write of ``df`` partitioned by its ``_bucket`` unit column
+        (dynamic partition overwrite: re-running a crashed subset
+        replaces only those units), then :meth:`_commit_units`."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(self._stage_dir(stage, input_fp))
+        )
+        return self._commit_units(stage, input_fp, pending)
+
+    def _commit_units(self, stage: str, input_fp: str, units: list[int]) -> dict[int, int]:
+        """Record freshly written units in ONE manifest append; returns
+        unit -> row count.  An all-empty write leaves no parquet files
+        (same narrow-fallback rule as _stage_df: anything but a
+        verified-empty dir raises)."""
+        path = self._stage_dir(stage, input_fp)
+        written = {}
+        if self._has_parquet_files(path):
+            rows = (
+                self.spark.read.parquet(path)
+                .where(F.col("_bucket").isin(units))
+                .groupBy("_bucket").agg(F.count("*").alias("n")).collect()
             )
-            counts = {
-                r["_bucket"]: r["n"]
-                for r in self._stage_counts("signatures", input_fp, pending)
-            }
-            # buckets that received no conv still count as completed units
-            self._record_bulk(
-                "signatures", {i: counts.get(i, 0) for i in pending}, input_fp
-            )
-            # empty buckets produce no directory; materialize an empty one
-            # so done_units' existence check passes on resume
-            for i in pending:
-                os.makedirs(self._unit_path("signatures", i, input_fp), exist_ok=True)
-        return self._stage_df("signatures", input_fp, fallback=empty_state)
+            written = {r["_bucket"]: r["n"] for r in rows}
+        # units that received no row still count as completed
+        counts = {i: written.get(i, 0) for i in units}
+        self._record_bulk(stage, counts, input_fp)
+        # empty units produce no directory; materialize an empty one so
+        # done_units' existence check passes on resume
+        for i in units:
+            os.makedirs(self._unit_path(stage, i, input_fp), exist_ok=True)
+        return counts
+
+    def _write_single(self, df: DataFrame, stage: str, input_fp: str) -> int:
+        """Write a single-unit stage (unit 0) and record it; returns its
+        row count."""
+        path = self._unit_path(stage, 0, input_fp)
+        df.write.mode("overwrite").parquet(path)
+        n = self.spark.read.parquet(path).count() if self._has_parquet_files(path) else 0
+        self._record_bulk(stage, {0: n}, input_fp)
+        return n
+
+    def _empty_relations(self, empty_state: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Schema donors for empty-stage fallbacks (lazy, no job): the
+        full-pass edges of an empty state, and labels of their id type."""
+        held: list[DataFrame] = []
+        empty_edges = full_edges(empty_state, self.cfg, 0, held)[0]
+        release(held, [])
+        id_type = dict(empty_edges.dtypes)["a"]
+        empty_labels = self.spark.createDataFrame(
+            [], f"conv_id {id_type}, cluster_id {id_type}"
+        )
+        return empty_edges, empty_labels
 
     def read_clusters(self, fps: list[str], fallback: DataFrame) -> DataFrame:
         """Compose a clusters chain: a full labeling written by run()
@@ -341,20 +401,13 @@ class LineageRunner:
             [], "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
         )
         empty_state = conv_signatures(donor_t, self.cfg)
+        empty_edges, empty_labels = self._empty_relations(empty_state)
         sigs = reduce(
             lambda a, b: a.unionByName(b),
             [self._stage_df("signatures", fp, fallback=empty_state) for fp in fps],
         )
         # per-batch edge sets are disjoint (old-old pairs are never
         # re-emitted), the dropDuplicates is crash-replay belt-and-braces
-        unit_of_bucket = F.pmod(F.col("bucket"), F.lit(self.edge_units)).cast("int")
-        empty_edges = verify_pairs(
-            candidate_pairs(
-                band_buckets(empty_state, self.cfg.lsh).withColumn("_unit", unit_of_bucket),
-                self.cfg.lsh, unit_col="_unit",
-            ),
-            empty_state, self.cfg.lsh, carry_cols=("_unit",),
-        ).drop("_unit")
         edges = reduce(
             lambda a, b: a.unionByName(b),
             [
@@ -369,10 +422,6 @@ class LineageRunner:
         idx = reduce(
             lambda a, b: a.unionByName(b),
             [read_band_index(self.spark, self.workdir, self.cfg, fp) for fp in fps],
-        )
-        id_type = dict(empty_edges.dtypes)["a"]
-        empty_labels = self.spark.createDataFrame(
-            [], f"conv_id {id_type}, cluster_id {id_type}"
         )
         full = self.read_clusters(fps, fallback=empty_labels)
         return sigs, edges, idx, full
@@ -392,15 +441,7 @@ class LineageRunner:
             .partitionBy("_bucket")
             .parquet(self._stage_dir("signatures", out_fp))
         )
-        for i in range(B):
-            os.makedirs(self._unit_path("signatures", i, out_fp), exist_ok=True)
-        sig_counts = {
-            r["_bucket"]: r["n"]
-            for r in self._stage_counts("signatures", out_fp, list(range(B)))
-        }
-        self._record_bulk(
-            "signatures", {i: sig_counts.get(i, 0) for i in range(B)}, out_fp
-        )
+        sig_counts = self._commit_units("signatures", out_fp, list(range(B)))
 
         (
             edges.withColumn("_bucket", F.pmod(F.xxhash64("a", "b"), F.lit(E)).cast("int"))
@@ -408,13 +449,7 @@ class LineageRunner:
             .partitionBy("_bucket")
             .parquet(self._stage_dir("edges", out_fp))
         )
-        for i in range(E):
-            os.makedirs(self._unit_path("edges", i, out_fp), exist_ok=True)
-        edge_counts = {
-            r["_bucket"]: r["n"]
-            for r in self._stage_counts("edges", out_fp, list(range(E)))
-        }
-        self._record_bulk("edges", {i: edge_counts.get(i, 0) for i in range(E)}, out_fp)
+        edge_counts = self._commit_units("edges", out_fp, list(range(E)))
 
         (
             idx.withColumn("_unit", F.pmod(F.col("bucket"), F.lit(8)).cast("int"))
@@ -423,9 +458,7 @@ class LineageRunner:
             .parquet(band_index_dir(self.workdir, self.cfg, out_fp))
         )
 
-        clusters.write.mode("overwrite").parquet(self._unit_path("clusters", 0, out_fp))
-        n_clusters = self._stage_count_all("clusters", out_fp)
-        self._record_bulk("clusters", {0: n_clusters}, out_fp)
+        n_clusters = self._write_single(clusters, "clusters", out_fp)
 
         return {
             "signatures": int(sum(sig_counts.values())),
@@ -461,8 +494,9 @@ class LineageRunner:
         new batch's signature buckets and edge units checkpoint exactly
         like run()'s, so a batch killed mid-verify resumes recomputing
         only pending units -- and every per-batch stage still scales
-        with the batch (plans/pipeline.incremental_dedup semantics:
-        persisted band index probe, delta-sized connected components).
+        with the batch (the same pipeline.batch_edges that
+        incremental_dedup runs: persisted band index probe, member
+        pushdown; then delta-sized connected components).
 
         base_fps: the input fingerprints of the COMPLETED runs this
         batch builds on, oldest first -- e.g. ["base"] for the first
@@ -477,8 +511,6 @@ class LineageRunner:
         """
         from functools import reduce
 
-        from ..operators.components import incremental_components_delta
-        from ..operators.lsh import incremental_candidate_pairs
         from .band_index import read_band_index
 
         if not base_fps:
@@ -486,10 +518,11 @@ class LineageRunner:
         stats = RunStats()
         E = self.edge_units
         empty_state = conv_signatures(new_transcripts.limit(0), self.cfg)
+        empty_edges, empty_labels = self._empty_relations(empty_state)
 
         # stage 1: signatures for the NEW batch only (same bucketized
         # path as run(); keyed by this batch's input_fp)
-        new_state = self._signatures_stage(new_transcripts, input_fp, stats)
+        new_state, _ = self._signatures_stage(new_transcripts, input_fp, stats)
         old_state = reduce(
             lambda a, b: a.unionByName(b),
             [self._stage_df("signatures", fp, fallback=empty_state) for fp in base_fps],
@@ -504,64 +537,19 @@ class LineageRunner:
 
         # stage 2: incremental edges, bucketized by band-bucket unit --
         # identical resume granularity to run()'s edge stage
-        unit_of_bucket = F.pmod(F.col("bucket"), F.lit(E)).cast("int")
-        empty_edges = verify_pairs(
-            candidate_pairs(
-                band_buckets(empty_state, self.cfg.lsh).withColumn("_unit", unit_of_bucket),
-                self.cfg.lsh, unit_col="_unit",
-            ),
-            empty_state, self.cfg.lsh, carry_cols=("_unit",),
-        ).drop("_unit")
-        done_e = self.done_units("edges", input_fp)
-        pending_e = [i for i in range(E) if i not in done_e]
-        stats.skipped["edges"] = len(done_e)
-        stats.computed["edges"] = len(pending_e)
+        _, pending_e = self._plan_units("edges", input_fp, E, stats)
         if pending_e:
-            nb = band_buckets(new_state, self.cfg.lsh).withColumn("_unit", unit_of_bucket)
-            ob = old_buckets.withColumn("_unit", unit_of_bucket)
-            if len(pending_e) < E:
-                nb = nb.where(F.col("_unit").isin(pending_e))
-                ob = ob.where(F.col("_unit").isin(pending_e))
-            resources: list[DataFrame] = []
-            ranked_holder: list[DataFrame] = []
-            cands = incremental_candidate_pairs(
-                ob, nb, self.cfg.lsh,
-                resources=resources, ranked_out=ranked_holder, unit_col="_unit",
+            held: list[DataFrame] = []
+            ckpts: list[DataFrame] = []
+            edges_w, report = batch_edges(
+                old_buckets, new_state, state, self.cfg, held, ckpts,
+                units=E, pending=pending_e,
             )
-            # the member prune references the pair list twice
-            cands = cands.persist()
-            cands.count()
-            resources.append(cands)
-            # small member sets prune by pushed-down literal filter
-            # (row-group skipping on the fat state read); larger ones
-            # semi-join -- see pipeline.member_pushdown_state
-            from .pipeline import member_pushdown_state
-
-            state_v, pushed = member_pushdown_state(cands, state, 20_000)
-            edges_w = verify_pairs(
-                cands, state_v, self.cfg.lsh,
-                carry_cols=("_unit",), prune_members=not pushed,
-            ).withColumnRenamed("_unit", "_bucket")
-            (
-                edges_w.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket")
-                .parquet(self._stage_dir("edges", input_fp))
+            self._write_units(
+                edges_w.withColumnRenamed("_unit", "_bucket"), "edges", input_fp, pending_e
             )
-            stats.bucket_stats = {
-                k: int(v if v is not None else 0)
-                for k, v in bucket_stats_from_ranked(ranked_holder[0], self.cfg.lsh)
-                .collect()[0].asDict().items()
-            }
-            for df in resources:
-                df.unpersist()
-            counts = {
-                r["_bucket"]: r["n"]
-                for r in self._stage_counts("edges", input_fp, pending_e)
-            }
-            self._record_bulk("edges", {i: counts.get(i, 0) for i in pending_e}, input_fp)
-            for i in pending_e:
-                os.makedirs(self._unit_path("edges", i, input_fp), exist_ok=True)
+            stats.bucket_stats = _report_dict(report)
+            release(held, ckpts)  # cache lifetime ends at the write
         new_edges = self._stage_df("edges", input_fp, fallback=empty_edges).dropDuplicates(["a", "b"])
 
         # stage 3: DELTA clusters -- write only rows that change: old
@@ -570,26 +558,17 @@ class LineageRunner:
         # O(corpus) bytes per daily ingest (terabytes of unchanged rows
         # at 10^12 convs); the delta scales with the batch.  Readers
         # compose base + deltas latest-wins (read_clusters).
-        id_type = dict(empty_edges.dtypes)["a"]
-        empty_labels = self.spark.createDataFrame(
-            [], f"conv_id {id_type}, cluster_id {id_type}"
-        )
-        # the base labeling = composition of the whole chain so far
-        old_clusters = self.read_clusters(base_fps, fallback=empty_labels)
-        if 0 in self.done_units("clusters", input_fp):
-            stats.skipped["clusters"] = 1
-            stats.computed["clusters"] = 0
-        else:
+        if self._plan_units("clusters", input_fp, 1, stats)[1]:
+            # the base labeling = composition of the whole chain so far
+            old_clusters = self.read_clusters(base_fps, fallback=empty_labels)
             delta = incremental_components_delta(
                 old_clusters, new_edges, new_state.select("conv_id")
             )
-            delta.write.mode("overwrite").parquet(self._unit_path("clusters", 0, input_fp))
-            n_delta = self._stage_count_all("clusters", input_fp)
-            self._record_bulk("clusters", {0: n_delta}, input_fp)
-            stats.computed["clusters"] = 1
             # observability: the write scales with the batch, not the
             # corpus -- surfaced so tests/operators can assert it
-            stats.computed["clusters_delta_rows"] = n_delta
+            stats.computed["clusters_delta_rows"] = self._write_single(
+                delta, "clusters", input_fp
+            )
         clusters = self.read_clusters(base_fps + [input_fp], fallback=empty_labels)
 
         # absorb: band this batch once so future increments probe it
@@ -609,96 +588,43 @@ class LineageRunner:
         self,
         transcripts: DataFrame,
         input_fp: str = "static",
-        full_bucket_stats: bool = False,
     ) -> tuple[dict[str, DataFrame], RunStats]:
-        """Run (or resume) the full dedup pipeline with checkpointing.
+        """Run (or resume) the full dedup pipeline with checkpointing:
+        dedup_pipeline's stages, each written per unit.
 
         input_fp identifies the input snapshot (Iceberg snapshot id /
         parquet fingerprint via sources.io.TableIO.snapshot_fingerprint).
-
-        full_bucket_stats: opt into the exact full-scan skew histogram
-        (one extra pass over band generation); the default derives the
-        same numbers from the pair pass's own persisted post-cap
-        relation at zero extra scans (dropped_members then lower-bounds
-        drops past the salted pre-cap).
         """
         stats = RunStats()
         E = self.edge_units
-        # lazily-built schema donors for empty-stage fallbacks (no jobs)
-        empty_state = conv_signatures(transcripts.limit(0), self.cfg)
+        empty_edges, empty_labels = self._empty_relations(
+            conv_signatures(transcripts.limit(0), self.cfg)
+        )
 
         # stage 1: per-bucket signatures -- ONE partitioned write for all
         # pending buckets + ONE bulk manifest append (see module docstring)
-        state = self._signatures_stage(transcripts, input_fp, stats)
+        state, n_convs = self._signatures_stage(transcripts, input_fp, stats)
 
-        # stage 2: LSH edges, bucketized by band-bucket range -- band
-        # buckets hash into `edge_units` resume units (a bucket lies
+        # stage 2: pipeline.full_edges, bucketized by band-bucket range --
+        # band buckets hash into `edge_units` resume units (a bucket lies
         # wholly in one unit, so per-bucket candidate generation is
         # complete per unit); ONE partitioned write covers all pending
         # units, so a kill mid-verify recomputes only what's missing.
-        unit_of_bucket = F.pmod(F.col("bucket"), F.lit(E)).cast("int")
-        bands_all = band_buckets(state, self.cfg.lsh).withColumn("_unit", unit_of_bucket)
-        # schema donor: the same plan over the empty state (lazy)
-        empty_edges = verify_pairs(
-            candidate_pairs(
-                band_buckets(empty_state, self.cfg.lsh).withColumn("_unit", unit_of_bucket),
-                self.cfg.lsh, unit_col="_unit",
-            ),
-            empty_state, self.cfg.lsh, carry_cols=("_unit",),
-        ).drop("_unit")
-        done_e = self.done_units("edges", input_fp)
-        pending_e = [i for i in range(E) if i not in done_e]
-        stats.skipped["edges"] = len(done_e)
-        stats.computed["edges"] = len(pending_e)
+        # The verify plan is decided as in dedup_pipeline, from the conv
+        # count stage 1 recorded (no extra job).
+        _, pending_e = self._plan_units("edges", input_fp, E, stats)
         if pending_e:
-            bands = (
-                bands_all.where(F.col("_unit").isin(pending_e))
-                if len(pending_e) < E
-                else bands_all
+            held: list[DataFrame] = []
+            edges_w, report, _ = full_edges(
+                state, self.cfg, n_convs, held, units=E, pending=pending_e
             )
-            if full_bucket_stats:
-                # opt-in full scan: one EXTRA pass over band generation
-                # (parquet read + explode + two aggs) purely for
-                # observability -- exact drop counts even past the
-                # salted pre-cap
-                stats.bucket_stats = {
-                    k: int(v if v is not None else 0)
-                    for k, v in bucket_stats(bands, self.cfg.lsh).collect()[0].asDict().items()
-                }
-            resources: list[DataFrame] = []
-            ranked_holder: list[DataFrame] = []
-            cands = candidate_pairs(
-                bands, self.cfg.lsh, resources=resources, unit_col="_unit",
-                ranked_out=ranked_holder,
+            self._write_units(
+                edges_w.withColumnRenamed("_unit", "_bucket"), "edges", input_fp, pending_e
             )
-            edges_w = verify_pairs(
-                cands, state, self.cfg.lsh, carry_cols=("_unit",)
-            ).withColumnRenamed("_unit", "_bucket")
-            (
-                edges_w.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket")
-                .parquet(self._stage_dir("edges", input_fp))
-            )
-            if not full_bucket_stats:
-                # default: derive the skew histogram from the persisted
-                # post-cap `ranked` relation the pair pass already built
-                # and the write just materialized -- no extra scan of
-                # stage-2 input (dropped_members is a lower bound past
-                # the salted pre-cap; see bucket_stats_from_ranked)
-                stats.bucket_stats = {
-                    k: int(v if v is not None else 0)
-                    for k, v in bucket_stats_from_ranked(ranked_holder[0], self.cfg.lsh)
-                    .collect()[0].asDict().items()
-                }
-            for df in resources:  # cache lifetime ends at the write
-                df.unpersist()
-            counts = {
-                r["_bucket"]: r["n"] for r in self._stage_counts("edges", input_fp, pending_e)
-            }
-            self._record_bulk("edges", {i: counts.get(i, 0) for i in pending_e}, input_fp)
-            for i in pending_e:
-                os.makedirs(self._unit_path("edges", i, input_fp), exist_ok=True)
+            # the bucket report reads the persisted post-cap relation the
+            # write just materialized -- no extra scan of band generation
+            stats.bucket_stats = _report_dict(report)
+            release(held, [])  # cache lifetime ends at the write
         # the same (a, b) pair found in buckets of two units appears once
         # per unit; its jaccard/hamming are identical, so key-dedup here
         edges = self._stage_df("edges", input_fp, fallback=empty_edges).dropDuplicates(["a", "b"])
@@ -706,54 +632,16 @@ class LineageRunner:
         # stage 3a: connected-component labels (checkpointed separately
         # from the singleton attach, so a kill between them resumes from
         # the labeled-edges output instead of re-running the CC fixpoint)
-        id_type = dict(empty_edges.dtypes)["a"]
-        empty_labels = self.spark.createDataFrame(
-            [], f"conv_id {id_type}, cluster_id {id_type}"
-        )
-        if 0 in self.done_units("labels", input_fp):
-            stats.skipped["labels"] = 1
-            stats.computed["labels"] = 0
-        else:
-            labels = connected_components(edges)
-            labels.write.mode("overwrite").parquet(self._unit_path("labels", 0, input_fp))
-            n = self._stage_count_all("labels", input_fp)
-            self._record_bulk("labels", {0: n}, input_fp)
-            stats.computed["labels"] = 1
+        if self._plan_units("labels", input_fp, 1, stats)[1]:
+            self._write_single(connected_components(edges), "labels", input_fp)
         labels = self._stage_df("labels", input_fp, fallback=empty_labels)
 
         # stage 3b: clusters = labels + singletons
-        empty_clusters = empty_labels
-        if 0 in self.done_units("clusters", input_fp):
-            stats.skipped["clusters"] = 1
-            stats.computed["clusters"] = 0
-        else:
-            clusters = attach_singletons(labels, state)
-            clusters.write.mode("overwrite").parquet(self._unit_path("clusters", 0, input_fp))
-            n = self._stage_count_all("clusters", input_fp)
-            self._record_bulk("clusters", {0: n}, input_fp)
-            stats.computed["clusters"] = 1
-        clusters = self._stage_df("clusters", input_fp, fallback=empty_clusters)
+        if self._plan_units("clusters", input_fp, 1, stats)[1]:
+            self._write_single(attach_singletons(labels, state), "clusters", input_fp)
+        clusters = self._stage_df("clusters", input_fp, fallback=empty_labels)
 
         return {"conv_state": state, "edges": edges, "clusters": clusters}, stats
-
-    def _stage_counts(self, stage: str, input_fp: str, pending: list[int]):
-        """Per-unit row counts of freshly written output (guarded: an
-        all-empty write leaves no parquet files; same narrow-fallback
-        rule as _stage_df -- anything but a verified-empty dir raises)."""
-        path = self._stage_dir(stage, input_fp)
-        if not self._has_parquet_files(path):
-            return []
-        written = self.spark.read.parquet(path)
-        return (
-            written.where(F.col("_bucket").isin(pending))
-            .groupBy("_bucket").agg(F.count("*").alias("n")).collect()
-        )
-
-    def _stage_count_all(self, stage: str, input_fp: str) -> int:
-        path = self._unit_path(stage, 0, input_fp)
-        if not self._has_parquet_files(path):
-            return 0
-        return self.spark.read.parquet(path).count()
 
     def reset_stage(self, stage: str) -> None:
         """The /reset analog (ResetHandler.java:43-83): drop a stage's

@@ -4,14 +4,20 @@ The whole pipeline is declarative DataFrame composition; Catalyst plans
 each stage (partial aggregation for the groupBys, AQE for skew).  The
 only Python on the data path is the fused MinHash/SimHash pandas UDF.
 
-Stage layout (each stage is a pure function, so lineage checkpointing in
-plans/lineage.py can persist and resume any prefix):
+Stage layout:
 
   1. assemble   -- turns -> conversations (stable turn order)
   2. signatures -- shingles + MinHash-128 + SimHash-64 per conv
   3. lsh        -- band buckets -> skew-capped candidate pairs
   4. verify     -- exact-jaccard edge verification (+ simhash hamming)
   5. components -- large-star/small-star fixpoint -> cluster labels
+
+This module owns the stage functions: ``conv_signatures``, and the two
+edge stages ``full_edges`` (stages 3-4 over a whole corpus) and
+``batch_edges`` (stages 3-4 for a new batch against a band index).
+``dedup_pipeline`` and ``incremental_dedup`` compose them in memory;
+plans/lineage.LineageRunner composes the SAME functions, adding only
+the manifest, the resume units and a write per stage.
 """
 
 from __future__ import annotations
@@ -25,16 +31,24 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..functions.signatures import text_signature_udf
 from ..functions.text import assemble_conversations
 from ..operators.components import (
+    _release_local_checkpoint,
     attach_singletons,
     connected_components,
     incremental_components,
 )
 from ..operators.lsh import (
     band_buckets,
+    bucket_stats_from_ranked,
     candidate_pairs,
     incremental_candidate_pairs,
     verify_pairs,
 )
+
+# prune_verify="auto" skips its member probe below this corpus size
+PROBE_MIN_CONVS = 20_000
+# member sets up to this size prune fat state by pushed-down literal
+# filter (member_pushdown_state); larger ones semi-join
+MEMBER_PUSHDOWN_THRESHOLD = 20_000
 
 
 def conv_signatures(transcripts: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -72,7 +86,7 @@ class DedupResult:
     # edges) / dropped_members (lower bound past the salted pre-cap).
     # Derived from the pair pass's persisted post-cap relation, so
     # materializing it costs no extra scan of band generation;
-    # LineageRunner.run surfaces the same numbers in RunStats.
+    # LineageRunner surfaces the same numbers in RunStats.
     bucket_report: DataFrame | None = None
     # what the prune_verify="auto" heuristic decided (None = forced mode)
     pruned_verify: bool | None = None
@@ -82,41 +96,203 @@ class DedupResult:
     # anti-join, defeating the batch-scaled absorb)
     new_edges: DataFrame | None = None
     resources: list = field(default_factory=list)  # persisted relations
+    checkpoints: list = field(default_factory=list)  # eager localCheckpoints
 
     def unpersist(self) -> None:
-        """Release every relation the pipeline persisted.  Call after the
-        last consumer of edges/clusters has materialized (written or
-        collected); repeated pipeline invocations in one session
-        otherwise accumulate cached blocks."""
-        for df in self.resources:
-            df.unpersist()
-        self.resources.clear()
+        """Release every relation the pipeline persisted or checkpointed.
+        Call after the last consumer of edges/clusters has materialized
+        (written or collected); repeated pipeline invocations in one
+        session otherwise accumulate cached blocks."""
+        release(self.resources, self.checkpoints)
+
+
+def release(resources: list, checkpoints: list) -> None:
+    """Unpersist ``resources`` and free the blocks of the eager
+    localCheckpoints in ``checkpoints``; empties both lists.  A
+    checkpoint has no lineage to recompute from, so nothing may read it
+    afterwards."""
+    for df in resources:
+        df.unpersist()
+    for df in checkpoints:
+        _release_local_checkpoint(df)
+    resources.clear()
+    checkpoints.clear()
+
+
+def _unit_rows(
+    buckets: DataFrame, units: int | None, pending: list[int] | None
+) -> DataFrame:
+    """Band rows tagged with their resume unit ``_unit = pmod(bucket,
+    units)`` and restricted to the ``pending`` units (plans/lineage.py's
+    edge stage); unchanged when ``units`` is None.  A band bucket lies
+    wholly inside one unit, so per-unit pair generation is complete."""
+    if units is None:
+        return buckets
+    tagged = buckets.withColumn("_unit", F.pmod(F.col("bucket"), F.lit(units)).cast("int"))
+    if pending is None or len(pending) >= units:
+        return tagged
+    return tagged.where(F.col("_unit").isin(pending))
+
+
+def full_edges(
+    state: DataFrame,
+    cfg: PipelineConfig,
+    n_convs: int | None,
+    resources: list[DataFrame],
+    prune_verify: bool | str = "auto",
+    probe_min_convs: int = PROBE_MIN_CONVS,
+    units: int | None = None,
+    pending: list[int] | None = None,
+) -> tuple[DataFrame, DataFrame, bool]:
+    """Stages 3-4 over a whole corpus: band ``state``, build capped
+    candidate pairs, decide the verify plan, verify.  Returns (lazy
+    verified edges, lazy bucket report, whether verify pruned).
+
+    n_convs: the corpus size, or None when unknown (then no prune).
+    resources: receives every relation this persists; the caller
+    unpersists them after its last consumer of the edges.
+    units / pending: resume units (see _unit_rows) -- the edges then
+    carry ``_unit`` for a partitioned write.
+
+    prune_verify: semi-join the fat signature state down to candidate
+    members before the verify joins.  True/False force it; "auto"
+    decides from measured counts -- pruning wins when pair members are
+    a small fraction of the corpus (real-world sparse dedup) and loses
+    on dup-dense corpora where members ~= corpus (the planted bench
+    corpus), so the heuristic counts DISTINCT pair members (not the
+    2*pairs proxy, which overshoots on mega-clusters)."""
+    # singleton prefilter stays ON at every measured scale: even when
+    # the multi-bucket list exceeds broadcast size (22M-turn corpus),
+    # the narrow count-aggregate + join costs less than the ~80% extra
+    # rows the two window sorts would otherwise process (certified A/B:
+    # 185 s without vs <=154 s with, 8 executors, quiet epoch)
+    ranked_holder: list[DataFrame] = []
+    cands = candidate_pairs(
+        _unit_rows(band_buckets(state, cfg.lsh), units, pending),
+        cfg.lsh,
+        resources=resources,
+        unit_col="_unit" if units is not None else None,
+        ranked_out=ranked_holder,
+    )
+    ranked = ranked_holder[0]
+    if prune_verify != "auto":
+        prune = bool(prune_verify)
+    elif n_convs is None or n_convs < probe_min_convs:
+        # below the floor both verify plans are trivially cheap and the
+        # probe itself (pair materialization + member count, two extra
+        # driver round-trips) costs more than it can save -- skip it and
+        # take the no-extra-pass plan.  The decision only picks a plan;
+        # edges are identical either way (test_prune_verify_modes_agree).
+        prune = False
+    else:
+        # measure DISTINCT pair members directly rather than the 2*pairs
+        # proxy: a few mega-clusters make members << 2*pairs, and the
+        # proxy would skip a profitable prune.  The count runs on the
+        # persisted post-cap RANKED relation -- every ranked row in a
+        # multi-member bucket is a pair member by construction (small
+        # buckets emit all pairs, large buckets star onto the root), so
+        # it equals the distinct member count of the pair list; the agg
+        # materializes the window pass into its cache (which verify's
+        # pair build then reuses), so the probe costs no separate pair
+        # materialization action.
+        n_members = ranked.agg(F.countDistinct("conv_id").alias("n")).collect()[0]["n"]
+        # pruning pays when pair members are a SMALL fraction of the
+        # corpus (each fat verify shuffle shrinks accordingly); the
+        # prune itself costs one extra shuffle of the fat state, so the
+        # break-even is well under 1/2 -- measured on the planted bench
+        # corpus (members ~43% of convs), pruning added ~10 s to a 63 s
+        # 8-exec wall, hence the 1/4 threshold
+        prune = n_members < n_convs // 4
+    if prune:
+        # member pruning references the pair list twice -- materialize
+        # it once (count also fails fast on a pair explosion)
+        cands = cands.persist()
+        cands.count()
+        resources.append(cands)
+    edges = verify_pairs(
+        cands, state, cfg.lsh, prune_members=prune,
+        carry_cols=("_unit",) if units is not None else (),
+    )
+    return edges, bucket_stats_from_ranked(ranked, cfg.lsh), prune
+
+
+def batch_edges(
+    old_buckets: DataFrame,
+    new_state: DataFrame,
+    state: DataFrame,
+    cfg: PipelineConfig,
+    resources: list[DataFrame],
+    checkpoints: list[DataFrame],
+    units: int | None = None,
+    pending: list[int] | None = None,
+    window_input_out: list[DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Stages 3-4 for a new batch: band ``new_state``, probe
+    ``old_buckets`` (the old corpus's band membership) for the buckets
+    it touches, build new-touching candidate pairs, prune ``state``
+    (old UNION new signatures) to the pair members, verify.  Returns
+    (lazy verified new edges, lazy bucket report).
+
+    resources / checkpoints: receive the relations this persists and the
+    eager localCheckpoint it takes; free both with :func:`release`.
+    units / pending: resume units, as for :func:`full_edges`.
+    window_input_out: observability hook forwarded to
+    operators/lsh.incremental_candidate_pairs."""
+    ranked_holder: list[DataFrame] = []
+    cands = incremental_candidate_pairs(
+        _unit_rows(old_buckets, units, pending),
+        _unit_rows(band_buckets(new_state, cfg.lsh), units, pending),
+        cfg.lsh,
+        resources=resources,
+        ranked_out=ranked_holder,
+        window_input_out=window_input_out,
+        unit_col="_unit" if units is not None else None,
+    )
+    # the member prune references the pair list twice -- materialize once
+    cands = cands.persist()
+    cands.count()
+    resources.append(cands)
+    # incremental pairs are a small fraction of the corpus by
+    # construction -- member pruning always pays here (it shrinks the
+    # fat shingle shuffle from O(corpus) to O(batch members)).  HOW we
+    # prune matters at 100 TB: a semi-join still SCANS the whole fat
+    # state to probe it, so when the member set is small enough to ship
+    # as a literal (<= MEMBER_PUSHDOWN_THRESHOLD), collect it and prune
+    # with an isin() filter instead -- Catalyst pushes the In down to
+    # the parquet scan, so row groups without members are skipped and
+    # the fat-state READ itself becomes batch-scaled (plan-asserted in
+    # tests/test_plan_quality.py).  Larger member sets fall back to the
+    # semi-join (a 10^6-literal In bloats the plan and beats nothing).
+    state_v, pushed = member_pushdown_state(cands, state, MEMBER_PUSHDOWN_THRESHOLD)
+    if pushed:
+        # the pushed-down member state is batch-sized (pair members only)
+        # but still carries the old corpus's full plan tree; verify
+        # references it twice.  Materialize the few thousand fat rows
+        # once -- the In() pushdown already made the scan cheap, and the
+        # checkpoint makes BOTH verify joins read a leaf instead of
+        # re-planning (and re-scanning) the corpus-sized tree.
+        state_v = state_v.localCheckpoint(eager=True)
+        checkpoints.append(state_v)
+    new_edges = verify_pairs(
+        cands, state_v, cfg.lsh, prune_members=not pushed,
+        carry_cols=("_unit",) if units is not None else (),
+    )
+    return new_edges, bucket_stats_from_ranked(ranked_holder[0], cfg.lsh)
 
 
 def dedup_pipeline(
     transcripts: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    verify_tier: str = "exact",
     cache_state: bool = True,
     prune_verify: bool | str = "auto",
-    cc_driver_threshold: int = 2_000_000,
-    probe_min_convs: int = 20_000,
+    probe_min_convs: int = PROBE_MIN_CONVS,
 ) -> DedupResult:
-    """cc_driver_threshold: edge count below which connected components
-    runs driver-side union-find (see operators/components.py); size it
-    to driver memory -- ~100 bytes/edge collected, so the default 2M
-    edges needs ~200 MB on the driver.  An execution knob, deliberately
-    NOT part of PipelineConfig: tuning it must not invalidate lineage.
+    """Full dedup of ``transcripts``: signatures, :func:`full_edges`,
+    connected components, singleton attach.
 
-    prune_verify: semi-join the fat signature state down to candidate
-    members before the verify joins.  True/False force it; "auto"
-    (default) decides from measured counts -- pruning wins when pair
-    members are a small fraction of the corpus (real-world sparse dedup)
-    and loses on dup-dense corpora where members ~= corpus (the planted
-    bench corpus), so the heuristic counts DISTINCT pair members on the
-    persisted pair list (not the 2*pairs proxy, which overshoots on
-    mega-clusters).  Auto requires cache_state (it uses the corpus
-    count that materialization already produces)."""
+    prune_verify / probe_min_convs: see :func:`full_edges`.  Auto
+    requires cache_state (it uses the corpus count that materialization
+    already produces)."""
     resources: list[DataFrame] = []
     n_convs: int | None = None
     state = conv_signatures(transcripts, cfg)
@@ -133,62 +309,9 @@ def dedup_pipeline(
         state = state.persist()
         n_convs = state.count()
         resources.append(state)
-    buckets = band_buckets(state, cfg.lsh)
-    # singleton prefilter stays ON at every measured scale: even when
-    # the multi-bucket list exceeds broadcast size (22M-turn corpus),
-    # the narrow count-aggregate + join costs less than the ~80% extra
-    # rows the two window sorts would otherwise process (certified A/B:
-    # 185 s without vs <=154 s with, 8 executors, quiet epoch)
-    ranked_holder: list[DataFrame] = []
-    cands = candidate_pairs(
-        buckets, cfg.lsh, resources=resources, ranked_out=ranked_holder
+    edges, report, prune = full_edges(
+        state, cfg, n_convs, resources, prune_verify, probe_min_convs
     )
-    if prune_verify == "auto":
-        if n_convs is None:
-            prune = False  # no corpus count available without cache_state
-        elif n_convs < probe_min_convs:
-            # below the floor both verify plans are trivially cheap and
-            # the probe itself (pair materialization + member count, two
-            # extra driver round-trips) costs more than it can save --
-            # skip it and take the no-extra-pass plan.  The decision
-            # only picks a plan; edges are identical either way
-            # (test_prune_verify_modes_agree).
-            prune = False
-        else:
-            # measure DISTINCT pair members directly rather than the
-            # 2*pairs proxy: a few mega-clusters make members << 2*pairs,
-            # and the proxy would skip a profitable prune.  r6: count on
-            # the persisted post-cap RANKED relation instead of
-            # union+distinct over the pair list -- every ranked row in a
-            # multi-member bucket is a pair member by construction (small
-            # buckets emit all pairs, large buckets star onto the root),
-            # so the two counts are identical; the agg materializes the
-            # window pass into its cache (which verify's pair build then
-            # reuses), so the probe no longer costs a separate pair
-            # materialization action at all (r5 shape: cands.persist +
-            # count + union-distinct = two extra driver round-trips and a
-            # 2x|pairs| shuffle; measured ~1.5-2 s at 100k convs)
-            n_members = (
-                ranked_holder[0]
-                .agg(F.countDistinct("conv_id").alias("n"))
-                .collect()[0]["n"]
-            )
-            # pruning pays when pair members are a SMALL fraction of the
-            # corpus (each fat verify shuffle shrinks accordingly); the
-            # prune itself costs one extra shuffle of the fat state, so
-            # the break-even is well under 1/2 -- measured on the planted
-            # bench corpus (members ~43% of convs), pruning added ~10 s
-            # to a 63 s 8-exec wall, hence the 1/4 threshold
-            prune = n_members < n_convs // 4
-    else:
-        prune = bool(prune_verify)
-    if prune:
-        # member pruning references the pair list twice -- materialize
-        # it once (count also fails fast on a pair explosion)
-        cands = cands.persist()
-        cands.count()
-        resources.append(cands)
-    edges = verify_pairs(cands, state, cfg.lsh, tier=verify_tier, prune_members=prune)
     # persist: connected components materializes the verify join anyway
     # (its edge count), and downstream consumers (metric tables' KLL
     # over jaccard, cluster diagnostics) re-reference edges -- without
@@ -196,7 +319,7 @@ def dedup_pipeline(
     # per re-run at 100k convs inside sketch_rollup)
     edges = edges.persist()
     resources.append(edges)
-    labels = connected_components(edges, driver_threshold=cc_driver_threshold)
+    labels = connected_components(edges)
     # persist: the caller's first action (a cluster count/write)
     # materializes this join once; every further consumer -- metric
     # tables, keeper policies, and ESPECIALLY incremental_components,
@@ -205,15 +328,9 @@ def dedup_pipeline(
     # re-run the labels-onto-state join per reference
     clusters = attach_singletons(labels, state).persist()
     resources.append(clusters)
-    from ..operators.lsh import bucket_stats_from_ranked
-
     return DedupResult(
         conv_state=state, edges=edges, clusters=clusters,
-        # derived from the pair pass's own persisted post-cap relation --
-        # no extra scan of band generation when materialized (same change
-        # LineageRunner got; multi-member buckets only, dropped_members
-        # lower-bounds past the salted pre-cap)
-        bucket_report=bucket_stats_from_ranked(ranked_holder[0], cfg.lsh),
+        bucket_report=report,
         pruned_verify=prune if prune_verify == "auto" else None,
         resources=resources,
     )
@@ -252,13 +369,10 @@ def incremental_dedup(
     old_edges: DataFrame,
     new_transcripts: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    verify_tier: str = "exact",
-    cc_driver_threshold: int = 2_000_000,
     old_buckets: DataFrame | None = None,
     old_clusters: DataFrame | None = None,
     window_input_out: list[DataFrame] | None = None,
     contracted_out: list[DataFrame] | None = None,
-    member_pushdown_threshold: int = 20_000,
 ) -> DedupResult:
     """Dedup a NEW batch of transcripts against an existing corpus
     without recomputing the old corpus -- the 100 TB daily-ingest shape.
@@ -310,6 +424,7 @@ def incremental_dedup(
     the candidate and CC operators (row counts must scale with |new|).
     """
     resources: list[DataFrame] = []
+    checkpoints: list[DataFrame] = []
     new_state = conv_signatures(new_transcripts, cfg).persist()
     new_state.count()  # eager, for the same cache-race reason as dedup_pipeline
     resources.append(new_state)
@@ -327,46 +442,14 @@ def incremental_dedup(
         old_clusters = old_clusters.select(
             "conv_id", "cluster_id"
         ).localCheckpoint(eager=True)
+        checkpoints.append(old_clusters)
     state = old_state.unionByName(new_state, allowMissingColumns=False)
 
     if old_buckets is None:
         old_buckets = band_buckets(old_state, cfg.lsh)
-    new_buckets = band_buckets(new_state, cfg.lsh)
-    ranked_holder: list[DataFrame] = []
-    cands = incremental_candidate_pairs(
-        old_buckets,
-        new_buckets,
-        cfg.lsh,
-        resources=resources,
-        ranked_out=ranked_holder,
+    new_edges, report = batch_edges(
+        old_buckets, new_state, state, cfg, resources, checkpoints,
         window_input_out=window_input_out,
-    )
-    # the member prune references the pair list twice -- materialize once
-    cands = cands.persist()
-    cands.count()
-    resources.append(cands)
-    # incremental pairs are a small fraction of the corpus by
-    # construction -- member pruning always pays here (it shrinks the
-    # fat shingle shuffle from O(corpus) to O(batch members)).  HOW we
-    # prune matters at 100 TB: a semi-join still SCANS the whole fat
-    # state to probe it, so when the member set is small enough to ship
-    # as a literal (<= member_pushdown_threshold), collect it and prune
-    # with an isin() filter instead -- Catalyst pushes the In down to
-    # the parquet scan, so row groups without members are skipped and
-    # the fat-state READ itself becomes batch-scaled (plan-asserted in
-    # tests/test_plan_quality.py).  Larger member sets fall back to the
-    # semi-join (a 10^6-literal In bloats the plan and beats nothing).
-    state_v, pushed = member_pushdown_state(cands, state, member_pushdown_threshold)
-    if pushed:
-        # the pushed-down member state is batch-sized (pair members only)
-        # but still carries the old corpus's full plan tree; verify
-        # references it twice.  Materialize the few thousand fat rows
-        # once -- the In() pushdown already made the scan cheap, and the
-        # checkpoint makes BOTH verify joins read a leaf instead of
-        # re-planning (and re-scanning) the corpus-sized tree.
-        state_v = state_v.localCheckpoint(eager=True)
-    new_edges = verify_pairs(
-        cands, state_v, cfg.lsh, tier=verify_tier, prune_members=not pushed
     )
     # referenced by the delta CC contraction, the edges union, and the
     # returned new_edges delta -- one verify materialization, not three
@@ -377,26 +460,22 @@ def incremental_dedup(
     edges = old_edges.select(*edge_cols).unionByName(new_edges.select(*edge_cols))
     if old_clusters is not None:
         labels = incremental_components(
-            old_clusters,
-            new_edges,
-            driver_threshold=cc_driver_threshold,
-            contracted_out=contracted_out,
+            old_clusters, new_edges, contracted_out=contracted_out
         )
     else:
-        labels = connected_components(edges, driver_threshold=cc_driver_threshold)
+        labels = connected_components(edges)
     # singleton attach over every old and new conv.  The node set comes
     # from the signature state, not old_clusters: a partial labeling
     # (connected_components output without its singletons) would
     # otherwise drop the old singletons from the result.
     clusters = attach_singletons(labels, state.select("conv_id")).persist()
     resources.append(clusters)
-    from ..operators.lsh import bucket_stats_from_ranked
-
     return DedupResult(
         conv_state=state, edges=edges, clusters=clusters,
-        bucket_report=bucket_stats_from_ranked(ranked_holder[0], cfg.lsh),
+        bucket_report=report,
         new_edges=new_edges.select(*edge_cols),
         resources=resources,
+        checkpoints=checkpoints,
     )
 
 
@@ -417,7 +496,6 @@ def cross_corpus_near_dups(
     train_state: DataFrame | None = None,
     train_buckets: DataFrame | None = None,
     eval_state: DataFrame | None = None,
-    member_pushdown_threshold: int = 20_000,
 ) -> DataFrame:
     """Signature-level decontamination BETWEEN corpora: verified near-dup
     pairs (train_conv_id, eval_conv_id, jaccard, hamming) at the
@@ -444,7 +522,7 @@ def cross_corpus_near_dups(
       equi-join against train band rows -- no shuffle of the train
       corpus, no cartesian.
     * the verify join prunes fat state to candidate-pair members; when
-      the member set fits ``member_pushdown_threshold`` the prune ships
+      the member set fits ``MEMBER_PUSHDOWN_THRESHOLD`` the prune ships
       as an In() literal pushed to the parquet scan
       (member_pushdown_state), so the fat-state READ is eval-scaled too.
 
@@ -493,7 +571,7 @@ def cross_corpus_near_dups(
     )
     cand.count()  # materialize: the member probe below must hit cache
     state = pre_t.unionByName(pre_e)
-    state_v, pushed = member_pushdown_state(cand, state, member_pushdown_threshold)
+    state_v, pushed = member_pushdown_state(cand, state, MEMBER_PUSHDOWN_THRESHOLD)
     verified = verify_pairs(
         cand, state_v, cfg.lsh, tier="exact", prune_members=not pushed
     )

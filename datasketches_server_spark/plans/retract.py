@@ -69,7 +69,6 @@ def retract_convs(
     edges: DataFrame,
     clusters: DataFrame,
     removed: DataFrame,
-    cc_driver_threshold: int = 2_000_000,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(conv_state', edges', clusters') with ``removed`` conv_ids gone.
 
@@ -114,8 +113,7 @@ def retract_convs(
         .select("a", "b")
     )
     relabeled = attach_singletons(
-        connected_components(sub_edges, driver_threshold=cc_driver_threshold),
-        survivors,
+        connected_components(sub_edges), survivors
     )
     clusters2 = untouched.unionByName(relabeled)
     return state2, edges2, clusters2

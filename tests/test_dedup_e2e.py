@@ -104,6 +104,10 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_path):
     # connected_components output: the old labeling minus its singletons
     partial = connected_components(old.edges.select("a", "b"))
     assert partial.count() < old.conv_state.count()
+    # materialize the caller's own cached labeling up front, so the
+    # persisted-RDD count below sees only what incremental_dedup holds
+    old.clusters.count()
+    jsc = spark.sparkContext._jsc
 
     for kwargs in (
         {},  # derived banding fallback + full CC over edge union
@@ -111,12 +115,15 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_path):
         {"old_buckets": index, "old_clusters": old.clusters},
         {"old_buckets": index, "old_clusters": partial},
     ):
+        n_rdds = jsc.getPersistentRDDs().size()
         inc = incremental_dedup(old.conv_state, old.edges, new_t, cfg, **kwargs)
         incremental = {r["conv_id"]: r["cluster_id"] for r in inc.clusters.collect()}
         assert incremental == want, f"mode {list(kwargs)} diverged"
         assert inc.clusters.count() == len(want)  # each conv labeled once
         assert inc.conv_state.count() == full.conv_state.count()
         inc.unpersist()
+        # every persist and localCheckpoint of the call is released
+        assert jsc.getPersistentRDDs().size() == n_rdds, f"mode {list(kwargs)} leaked"
 
     n_new = new_t.select("conv_id").distinct().count()
     assert n_new > 0

@@ -37,6 +37,12 @@ def test_full_run_then_noop_resume(spark, workdir):
     assert s1.bucket_stats["n_buckets"] > 0
     assert "dropped_members" in s1.bucket_stats and "star_buckets" in s1.bucket_stats
     f1 = _fingerprint(out1["clusters"])
+    # the runner composes the pipeline's own stages: same clustering
+    from datasketches_server_spark.plans.pipeline import dedup_pipeline
+
+    api = dedup_pipeline(t, cfg)
+    assert _fingerprint(api.clusters) == f1
+    api.unpersist()
 
     out2, s2 = runner.run(t)
     assert s2.computed == NONE
@@ -279,10 +285,12 @@ def test_reset_stage(spark, workdir):
     assert s.computed == {"signatures": 0, "edges": 0, "labels": 0, "clusters": 1}
 
 
-def test_cli_full_then_incremental_batch(spark, tmp_path):
+def test_cli_full_then_incremental_batch(spark, tmp_path, monkeypatch):
     """__main__.main drives full-run + --batch-input incremental absorb
     end-to-end: the batch summary reports batch-scaled conv counts and
-    the composed labeling covers the whole corpus."""
+    the composed labeling covers the whole corpus.  The full run's
+    --input is a RELATIVE path containing a dot: an existing path is
+    read as parquet, never as a catalog table name."""
     import json
     from contextlib import redirect_stdout
     from io import StringIO
@@ -292,7 +300,7 @@ def test_cli_full_then_incremental_batch(spark, tmp_path):
 
     base = synth_transcripts(spark, n_convs=120, seed=5)
     batch = synth_transcripts(spark, n_convs=30, seed=99)
-    base_p, batch_p = str(tmp_path / "base"), str(tmp_path / "batch")
+    base_p, batch_p = str(tmp_path / "data" / "base.parquet"), str(tmp_path / "batch")
     base.write.parquet(base_p)
     # distinct conv ids so the batch is genuinely new
     batch.selectExpr(
@@ -306,7 +314,9 @@ def test_cli_full_then_incremental_batch(spark, tmp_path):
             assert main(argv, spark=spark) == 0
         return json.loads(buf.getvalue().strip().splitlines()[-1])
 
-    full = run(["--input", base_p, "--workdir", wd])
+    monkeypatch.chdir(tmp_path)
+    full = run(["--input", "data/base.parquet", "--workdir", wd])
+    assert full["n_convs"] == 120
     inc = run(
         ["--batch-input", batch_p, "--workdir", wd,
          "--base-fps", full["input_fp"], "--batch-fp", "day1"]

@@ -37,6 +37,20 @@ def test_q02_broadcasts_small_dims(spark, sf_dir):
     assert "SortMergeJoin" not in p  # dims must not trigger a sort-merge
 
 
+def test_prefer_shuffled_hash_join_by_build_side_size(spark):
+    """The session sets spark.sql.join.preferSortMergeJoin=false: an
+    equi-join whose build side fits a per-partition hash map (estimated
+    size < broadcast threshold x shuffle partitions) plans a shuffled
+    hash join; a larger build side keeps the sort-merge join.  Plan
+    only: explain runs no Spark job."""
+    big = spark.range(10**10)
+    p = plan_str(big.join(spark.range(10**7), "id"))
+    assert "ShuffledHashJoin" in p and "SortMergeJoin" not in p
+    for n in (10**8, 10**10):
+        p = plan_str(big.join(spark.range(n), "id"))
+        assert "SortMergeJoin" in p and "ShuffledHashJoin" not in p, n
+
+
 def test_signature_state_reused_from_cache(spark):
     """verify_pairs references conv_state three times (bucketing + both
     join sides); the default pipeline persists it so the signature UDF
